@@ -75,6 +75,7 @@ def arrow_cosine_pairs(
     other columns or fuse into a join keep ``with_cosine``.
     """
     import pyarrow as pa
+    import pyarrow.compute as pc
 
     schema = {f.name: f.dataType.simpleString() for f in df.schema.fields}
     out_schema = ", ".join(
@@ -90,8 +91,8 @@ def arrow_cosine_pairs(
             va = batch.column(n_ids)
             vb = batch.column(n_ids + 1)
             nulls = (
-                pa.compute.is_null(va).to_numpy(zero_copy_only=False)
-                | pa.compute.is_null(vb).to_numpy(zero_copy_only=False)
+                pc.is_null(va).to_numpy(zero_copy_only=False)
+                | pc.is_null(vb).to_numpy(zero_copy_only=False)
             )
             if nulls.any():
                 # rare degenerate rows (null vector): NULL cosine, same

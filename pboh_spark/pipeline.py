@@ -322,7 +322,7 @@ def run_pipeline(
         assign_upstream = ["s5_candidates", "s2_lambda"] + (
             ["s5_weights"] if weights is not None else []
         ) + (["s5_param_tables"] if param_tables is not None else [])
-        ck.run_stage(
+        assignments = ck.run_stage(
             assign_name,
             build_assignments,
             upstream=assign_upstream,
@@ -332,40 +332,24 @@ def run_pipeline(
             },
         )
         sm = ck.stage_metrics(assign_name)
-        pct = sm.get("observed", {}).get("pct_converged")
-        avg_iters = sm.get("observed", {}).get("avg_iters")
         # bucketed convergence rollup ≙ GlobalStats.scala:200-209 — two
         # tiny aggs over the checkpointed assignments parquet (column-
         # pruned scan of a small table; the stage write itself already
         # carried the global observes above)
-        assignments = spark.read.parquet(str(ck._paths(assign_name)[0]))
-        if pct is None or avg_iters is None:
-            # stage resumed from a checkpoint written before the observe()
-            # change (its metrics.json has no 'observed') — compute once
-            row = assignments.agg(
-                F.avg(F.col("converged").cast("int")).alias("p"),
-                F.avg(F.col("n_iters")).alias("a"),
-            ).collect()[0]
-            pct = row["p"] if pct is None else pct
-            avg_iters = row["a"] if avg_iters is None else avg_iters
         conv_rows = resolve.convergence_report(assignments).collect()
         metrics["lbp"] = {
-            "n_assignments": sm.get("rows"),
-            "pct_converged": pct,
-            "avg_iters": avg_iters,
+            "n_assignments": sm["rows"],
+            "pct_converged": sm["observed"]["pct_converged"],
+            "avg_iters": sm["observed"]["avg_iters"],
             "convergence_by_size": [r.asDict() for r in conv_rows],
         }
 
-    # row counts come from the stage metrics (counted once during the
-    # checkpoint write); n_matches from the observed aggregate — the only
-    # post-hoc action left is the distinct cluster count
-    metrics["n_pairs_scored"] = ck.stage_metrics(f"s4_pairs{sfx}").get("rows")
-    n_matches = ck.stage_metrics(f"s4_pairs{sfx}").get("observed", {}).get(
-        "n_matches"
-    )
-    if n_matches is None:  # pre-observe checkpoint resumed — count once
-        n_matches = scored.where("is_match_pred").count()
-    metrics["n_matches"] = n_matches
+    # row counts and the match count ride the checkpoint writes (stage
+    # metrics + the observed aggregate) — the only post-hoc action left is
+    # the distinct cluster count
+    pair_metrics = ck.stage_metrics(f"s4_pairs{sfx}")
+    metrics["n_pairs_scored"] = pair_metrics["rows"]
+    metrics["n_matches"] = pair_metrics["observed"]["n_matches"]
     metrics["n_clusters"] = clusters.select("cluster_id").distinct().count()
     metrics["text_equality_violations"] = normalize.verify_text_equality(
         transcripts, normalize.normalize_turns(transcripts)

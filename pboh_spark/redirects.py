@@ -59,13 +59,3 @@ def resolve_redirects(
         )
     return out
 
-
-def redirect_coverage(
-    df: DataFrame, redirects: DataFrame, col: str = "name"
-) -> dict[str, int]:
-    """Diagnostic: how many fact rows hit the redirect dim (one semi-join
-    count) — the 'never silently' metric for alias-heavy corpora."""
-    n_redirected = df.join(
-        redirects.select(F.col("alias").alias(col)), col, "left_semi"
-    ).count()
-    return {"n_rows": df.count(), "n_redirected": n_redirected}

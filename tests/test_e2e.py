@@ -97,12 +97,19 @@ def test_learn_params_stage_checkpoints_and_serves(spark, universe, tmp_path_fac
     assert m2["param_tables"]["loss_history"] == pt["loss_history"]
 
 
-def test_per_partition_lineage_recorded(e2e):
+def test_stage_metrics_record_rows_checksum_upstream(spark, e2e):
+    """metrics.json carries the rows and content checksum the stage's
+    write observed, plus its upstream stages' fingerprints."""
     out, *_ = e2e
     m = json.loads(Path(out, "s4_pairs", "metrics.json").read_text())
-    assert m["rows"] == sum(p["rows"] for p in m["per_partition"])
-    assert m["n_partitions"] >= 1
-    assert "s3_blocked" in m["upstream"]
+    assert m["rows"] == spark.read.parquet(f"{out}/s4_pairs/data").count()
+    assert isinstance(m["checksum"], int)
+    assert "n_matches" in m["observed"]
+    assert set(m["upstream"]) == {"s3_blocked", "s2_lambda"}
+    up = json.loads(Path(out, "s3_blocked", "metrics.json").read_text())
+    assert m["upstream"]["s3_blocked"] == (
+        f"{up['rows']}:{up['checksum']}:{up['schema']}"
+    )
 
 
 def test_size_bucketed_stats(spark, e2e):

@@ -7,7 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from pboh_spark import stats
-from pboh_spark.redirects import redirect_coverage, resolve_redirects
+from pboh_spark.redirects import resolve_redirects
 
 
 @pytest.fixture(scope="module")
@@ -64,12 +64,6 @@ def test_mass_merges_into_name_stats(spark, redirects):
     # merged: p̂(7|a) = 3/4 beats the pre-chase 1/2
     row = post.where((F.col("name") == "a") & (F.col("entity") == 7)).collect()
     assert row[0]["prob"] == pytest.approx(0.75)
-
-
-def test_coverage_diagnostic(spark, redirects):
-    df = _names(spark, ["a", "b", "c", "z"])
-    cov = redirect_coverage(df, redirects)
-    assert cov == {"n_rows": 4, "n_redirected": 2}
 
 
 def test_fact_table_with_alias_column_survives(spark, redirects):
