@@ -472,29 +472,6 @@ def load_gerbil_gold(
     return mentions, gold
 
 
-def load_raw_texts(spark: SparkSession, raw_dir: str) -> DataFrame:
-    """RawTexts/ context directory → input_hint transcript turns, one
-    per file (AQUAINT_MSNBC_ACE04.scala:54 / GERBIL_MSNBC.scala:36-37:
-    lines joined by a single space; the GERBIL variant's ’→' char
-    replacement applied unconditionally — harmless for the others)."""
-    return (
-        spark.read.text(f"{raw_dir}/*", wholetext=True)
-        .select(
-            F.element_at(
-                F.split(F.input_file_name(), "/"), -1
-            ).alias("conv_id"),
-            F.lit(0).alias("turn_idx"),
-            F.lit("document").alias("role"),
-            F.translate(
-                F.regexp_replace(_unix_lines(F.col("value")), "\n", " "),
-                "’", "'",
-            ).alias("text"),
-            F.lit(None).cast("string").alias("tool"),
-            F.lit(None).cast("timestamp").alias("ts"),
-        )
-    )
-
-
 def to_transcripts(docs: DataFrame) -> DataFrame:
     """AIDA documents as input_hint transcript turns (conv_id, turn_idx,
     role, text, tool, ts) — one turn per document, text = the

@@ -3,7 +3,6 @@
 Reference parity:
 * P/R via solution∩gold set intersection — eval/Verifier.scala:24-43
 * micro/macro F1 aggregation — eval/GlobalStats.scala:236-248
-* doc-size-bucketed stats — eval/GlobalStats.scala:116-141 (A8)
 * labeled pairs "at the reference blocking key": two mentions are
   comparable iff their normalized names share a candidate entity in the
   p̂(e|m) index — the same comparability the reference's candidate
@@ -276,54 +275,6 @@ def linking_accuracy(
         "n_mentions": int(n),
         "n_multilabel_surfaces": int(row["multi"] or 0),
     }
-
-
-def size_bucketed_f1(
-    labeled_pairs: DataFrame, components: DataFrame, gold_mentions: DataFrame
-) -> DataFrame:
-    """F1 bucketed by conversation mention-count — ≙ the reference's
-    doc-size-bucketed GlobalStats (GlobalStats.scala:116-141). Returns a
-    small DataFrame (bucket, precision, recall, f1)."""
-    sizes = gold_mentions.groupBy("conv_id").agg(F.count("*").alias("n_m"))
-    bucket = (
-        F.when(F.col("n_m") == 1, "1")
-        .when(F.col("n_m") == 2, "2")
-        .when(F.col("n_m") <= 10, "3-10")
-        .otherwise("11+")
-    )
-    sized = sizes.withColumn("bucket", bucket).select(
-        F.col("conv_id").alias("conv_id_a"), "bucket"
-    )
-    la = components.select(
-        F.col("id").alias("mention_id_a"), F.col("cluster_id").alias("ca")
-    )
-    lb = components.select(
-        F.col("id").alias("mention_id_b"), F.col("cluster_id").alias("cb")
-    )
-    j = (
-        labeled_pairs.join(la, "mention_id_a", "left")
-        .join(lb, "mention_id_b", "left")
-        .join(sized, "conv_id_a", "left")
-        .withColumn(
-            "pred",
-            F.col("ca").isNotNull()
-            & F.col("cb").isNotNull()
-            & (F.col("ca") == F.col("cb")),
-        )
-    )
-    agg = j.groupBy("bucket").agg(
-        F.sum(F.when(F.col("pred") & F.col("is_match"), 1).otherwise(0)).alias("tp"),
-        F.sum(F.when(F.col("pred") & ~F.col("is_match"), 1).otherwise(0)).alias("fp"),
-        F.sum(F.when(~F.col("pred") & F.col("is_match"), 1).otherwise(0)).alias("fn"),
-    )
-    p = F.col("tp") / F.greatest(F.col("tp") + F.col("fp"), F.lit(1))
-    r = F.col("tp") / F.greatest(F.col("tp") + F.col("fn"), F.lit(1))
-    return agg.select(
-        "bucket",
-        p.alias("precision"),
-        r.alias("recall"),
-        (2 * p * r / F.greatest(p + r, F.lit(1e-12))).alias("f1"),
-    )
 
 
 def candidate_rank_report(

@@ -20,15 +20,16 @@ Reference parity (file:line in /root/reference/src/main/scala/):
   partial results reduced, then one driver-side update per round.
 
 Spark recast: the reference runs per-worker *stochastic* SGD and merges
-weight deltas; here each round is ONE deterministic full-batch job —
-per-conversation losses/gradients from the same cogrouped
-``applyInPandas`` shape as the LBP kernel (all tensors already exist in
-resolve.py), merged by a fixed-point aggregate, AdaGrad'd driver-side.
-Same merge topology, but reproducible: results are bit-identical at any
-partitioning because per-conversation float results are quantized to
-integer 1e-9 units before the (order-independent) long sum — float
-addition order across partitions can never leak into the fitted weights,
-which is what makes the golden-oracle contract query possible.
+weight deltas; here each round is ONE deterministic full-batch job. The
+weight-independent per-conversation contractions are assembled once per
+fit (``preassembled_convs``, the same cogrouped ``applyInPandas`` shape
+as the LBP kernel); each round re-evaluates them at θ in a plain RDD job
+whose tasks quantize every conversation's loss and gradients to integer
+1e-9 units (``_quantize``) and return per-partition long sums, totalled
+and AdaGrad'd driver-side. Same merge topology, but reproducible: long
+addition is exact and commutes, so float addition order across
+partitions can never leak into the fitted weights, which is what makes
+the golden-oracle contract query possible.
 
 λ(h) is affine in h for BOTH stored and backoff pairs:
     stored:  λ = log_smoothed − h·(log p̂(e1) + log p̂(e2))   (ScorerFull
@@ -61,10 +62,6 @@ from pyspark.sql import functions as F
 from pboh_spark.resolve import LAMBDA_FLOOR, _pack
 from pboh_spark.stats import ScorerWeights
 
-GRAD_SCHEMA = (
-    "conv_id string, loss double, g_f double, g_g double, g_h double, "
-    "g_b double, n_mentions int"
-)
 CLAMP = 10.0  # FewParamsLearning.scala:330 log_factor discard threshold
 MAX_DOC = 25  # FewParamsLearning.scala:364
 _FIXED = 1e9  # fixed-point quantum for the order-independent merge
@@ -205,18 +202,12 @@ def _pl_conv(
     )
 
 
-def _conv_tensors(cand: pd.DataFrame, lam: pd.DataFrame):
-    """Pandas → dense per-conversation tensors (shared by the one-shot
-    gradient kernel and the r6 preassembly kernel): returns
-    (ents, rho, logpop, surfaces, gold_ent, gold_idx, c0_map, c1_map,
-    ctx_or_None)."""
-    c0_map, c1_map = {}, {}
-    if len(lam):
-        pk = _pack(
-            lam["e1"].to_numpy(np.int64), lam["e2"].to_numpy(np.int64)
-        )
-        c0_map = dict(zip(pk, lam["log_smoothed"].to_numpy(np.float64)))
-        c1_map = dict(zip(pk, lam["lp_sum"].to_numpy(np.float64)))
+def _conv_tensors(cand: pd.DataFrame):
+    """One conversation's candidate rows → dense (L, K) tensors, shared by
+    both fits' kernels (the weight fit's preassembly and the param fit's
+    gradient kernel): returns (ents, rho, logpop, surfaces, gold_ent,
+    gold_idx, ctx_or_None). Each kernel builds its own packed-pair maps
+    from its λ side."""
     cand = cand.sort_values(["mention_id", "entity"])
     mids = cand["mention_id"].unique()
     L = len(mids)
@@ -246,28 +237,7 @@ def _conv_tensors(cand: pd.DataFrame, lam: pd.DataFrame):
         hit = np.nonzero(e[:k] == ge)[0]
         if len(hit):
             gold_idx[i] = int(hit[0])
-    return ents, rho, logpop, surfaces, gold_ent, gold_idx, c0_map, c1_map, ctx
-
-
-def _grad_kernel(w: ScorerWeights, lam_const: float):
-    def solve(cand: pd.DataFrame, lam: pd.DataFrame) -> pd.DataFrame:
-        cols = ["conv_id", "loss", "g_f", "g_g", "g_h", "g_b", "n_mentions"]
-        if cand.empty:
-            return pd.DataFrame(columns=cols)
-        conv = cand["conv_id"].iloc[0]
-        (ents, rho, logpop, surfaces, gold_ent, gold_idx,
-         c0_map, c1_map, ctx) = _conv_tensors(cand, lam)
-        loss, g, n = _pl_conv(
-            ents, rho, logpop, surfaces, gold_ent, gold_idx,
-            c0_map, c1_map, w, lam_const, ctx=ctx,
-        )
-        return pd.DataFrame(
-            {"conv_id": [conv], "loss": [loss], "g_f": [g[0]],
-             "g_g": [g[1]], "g_h": [g[2]], "g_b": [g[3]],
-             "n_mentions": [n]}
-        )
-
-    return solve
+    return ents, rho, logpop, surfaces, gold_ent, gold_idx, ctx
 
 
 PRE_SCHEMA = "conv_id string, blob binary"
@@ -283,8 +253,15 @@ def _assemble_kernel(lam_const: float):
         if cand.empty:
             return pd.DataFrame(columns=["conv_id", "blob"])
         conv = cand["conv_id"].iloc[0]
+        c0_map, c1_map = {}, {}
+        if len(lam):
+            pk = _pack(
+                lam["e1"].to_numpy(np.int64), lam["e2"].to_numpy(np.int64)
+            )
+            c0_map = dict(zip(pk, lam["log_smoothed"].to_numpy(np.float64)))
+            c1_map = dict(zip(pk, lam["lp_sum"].to_numpy(np.float64)))
         (ents, rho, logpop, surfaces, gold_ent, gold_idx,
-         c0_map, c1_map, ctx) = _conv_tensors(cand, lam)
+         ctx) = _conv_tensors(cand)
         pre = _pl_prepare(
             ents, rho, logpop, surfaces, gold_ent, gold_idx,
             c0_map, c1_map, lam_const, ctx=ctx,
@@ -301,10 +278,12 @@ def preassembled_convs(
     cand_gold: DataFrame, conv_lambdas: DataFrame, lam_const: float
 ) -> DataFrame:
     """(conv_id, blob) — the weight-independent per-conversation
-    contractions, computed by the SAME cogrouped exchange shape as
-    ``pseudolikelihood_grads`` but only once per fit instead of once per
-    round. Rounds then re-evaluate ``_pl_round`` over this table (a
-    narrow mapInPandas with no shuffle), so an n-round fit pays one
+    contractions, built by one cogrouped exchange on conv_id (the shape
+    of resolve.resolve_entities) once per fit. ``conv_lambdas`` carries
+    (conv_id, e1, e2, log_smoothed, lp_sum)
+    (resolve.conv_lambda_pairs(..., value_cols=("log_smoothed",
+    "lp_sum"))). Rounds then re-evaluate ``_pl_round`` over this table
+    with no shuffle (``_round_totals``), so an n-round fit pays one
     assembly shuffle + n cheap scans rather than n assembly shuffles."""
     return (
         cand_gold.groupBy("conv_id")
@@ -319,8 +298,9 @@ def _quantize(x: float) -> int:
     representation of the double (Double.toString) and setScale(0,
     HALF_UP) rounds it — Python's repr(float) produces the same shortest
     round-trip decimal string, so Decimal(repr(v)) is the same decimal
-    value and ROUND_HALF_UP the same rule. Pinned against the literal
-    Spark expression over fuzz + boundary values in
+    value and ROUND_HALF_UP the same rule. The one rounding rule of both
+    fits' fixed-point merges; pinned against the literal Spark expression
+    over fuzz + boundary values in
     tests/test_learning.py::test_fused_round_quantizer_matches_spark."""
     from decimal import ROUND_HALF_UP, Decimal
 
@@ -328,40 +308,31 @@ def _quantize(x: float) -> int:
     return int(Decimal(repr(v)).quantize(Decimal("1"), rounding=ROUND_HALF_UP))
 
 
-PART_SCHEMA = (
-    "loss long, g_f long, g_g long, g_h long, g_b long, n_convs long"
-)
-_QCOLS = ("loss", "g_f", "g_g", "g_h", "g_b")
-
-
-def _fused_round_kernel(w: ScorerWeights):
-    """Single-stage round kernel (r6): evaluate every conversation's
-    ``_pl_round`` at θ AND fold the fixed-point merge's per-partition
-    partial sums inside the same Python task — one row out per
-    partition, no exchange, no second stage. The quantization is the
-    same HALF_UP long as the former Spark-side
-    ``sum(round(col·1e9).cast(long))`` (see ``_quantize``), and long
-    partial sums per partition + a driver total equal the global long
-    sum by integer associativity — the merge stays bit-identical at any
-    partitioning."""
+def _round_totals(blobs, w: ScorerWeights) -> list[int]:
+    """One round over ``blobs`` (an RDD of ``preassembled_convs`` rows
+    carrying ``blob``): each task evaluates its conversations'
+    ``_pl_round`` at θ, quantizes loss and gradients (``_quantize``) and
+    returns long partial sums; the driver totals them into
+    [loss, g_f, g_g, g_h, g_b, n_convs]. Exact integer addition commutes,
+    so the totals are bit-identical at any partitioning. A plain RDD job:
+    re-running it per round plans no SQL query."""
     import pickle
 
-    def ev(batches):
+    def partials(rows):
         acc = [0, 0, 0, 0, 0, 0]
-        seen = False
-        for pdf in batches:
-            seen = True
-            for blob in pdf["blob"]:
-                loss, g, n = _pl_round(pickle.loads(bytes(blob)), w)
-                acc[0] += _quantize(loss)
-                for i in range(4):
-                    acc[1 + i] += _quantize(g[i])
-                if n > 0:
-                    acc[5] += 1
-        if seen:
-            yield pd.DataFrame([acc], columns=list(_QCOLS) + ["n_convs"])
+        for row in rows:
+            loss, g, n = _pl_round(pickle.loads(bytes(row.blob)), w)
+            acc[0] += _quantize(loss)
+            for i in range(4):
+                acc[1 + i] += _quantize(g[i])
+            if n > 0:
+                acc[5] += 1
+        yield acc
 
-    return ev
+    tot = [0, 0, 0, 0, 0, 0]
+    for part in blobs.mapPartitions(partials).collect():
+        tot = [a + b for a, b in zip(tot, part)]
+    return tot
 
 
 def learning_candidates(
@@ -395,54 +366,6 @@ def learning_candidates(
     )
 
 
-def pseudolikelihood_grads(
-    cand_gold: DataFrame,
-    conv_lambdas: DataFrame,
-    weights: ScorerWeights,
-    lam_const: float = LAMBDA_FLOOR,
-    checkpoint: bool = True,
-) -> DataFrame:
-    """Per-conversation (loss, ∂f, ∂g, ∂h, ∂b) — one cogrouped Arrow
-    exchange on conv_id, the same distribution shape as
-    resolve.resolve_entities. ``conv_lambdas`` must carry (conv_id, e1,
-    e2, log_smoothed, lp_sum)
-    (resolve.conv_lambda_pairs(..., value_cols=("log_smoothed","lp_sum"))).
-    ``checkpoint=False`` skips the lineage-truncating localCheckpoint —
-    pass it when the caller already checkpointed the (static) lambda
-    table once, e.g. learn_weights' round loop."""
-    lam = (
-        conv_lambdas.localCheckpoint(eager=False)
-        if checkpoint
-        else conv_lambdas
-    )
-    return (
-        cand_gold.groupBy("conv_id")
-        .cogroup(lam.groupBy("conv_id"))
-        .applyInPandas(_grad_kernel(weights, lam_const), GRAD_SCHEMA)
-    )
-
-
-def _merge_round(grads: DataFrame) -> tuple[float, np.ndarray, int]:
-    """Order-independent merge: per-conv doubles quantized to 1e-9 units,
-    summed as longs (exact integer addition commutes — the result is
-    bit-identical at any partitioning), then un-scaled to per-conv means.
-    ≙ Learning.scala:296-361's reduce-then-finalMerge, made deterministic."""
-    q = lambda c: F.sum(F.round(F.col(c) * _FIXED).cast("long")).alias(c)  # noqa: E731
-    row = grads.agg(
-        q("loss"), q("g_f"), q("g_g"), q("g_h"), q("g_b"),
-        F.sum(F.when(F.col("n_mentions") > 0, 1).otherwise(0)).alias("n_convs"),
-    ).collect()[0]
-    n = int(row["n_convs"] or 0)
-    if n == 0:
-        return 0.0, np.zeros(4), 0
-    loss = row["loss"] / _FIXED / n
-    g = (
-        np.array([row["g_f"], row["g_g"], row["g_h"], row["g_b"]])
-        / _FIXED / n
-    )
-    return float(loss), g, n
-
-
 def learn_weights(
     cand_gold: DataFrame,
     conv_lambdas: DataFrame,
@@ -455,7 +378,8 @@ def learn_weights(
 ) -> tuple[ScorerWeights, list[dict]]:
     """Full-batch AdaGrad ascent on the regularized pseudolikelihood
     over θ = (f, g, h, b). One Spark job per round (the distributed-SGD
-    round/merge shape, Learning.scala:296-361); the AdaGrad state and
+    round/merge shape, Learning.scala:296-361: per-partition quantized
+    partial sums, one driver-side update); the AdaGrad state and
     box projection live on the driver (FewParamsLearning.scala:819-849,
     ScorerWeights.scala:120-154: f,g clamped to [0.001, 15], b to
     [1e-8, 10], h bounded only by h·g ≥ −15).
@@ -468,15 +392,14 @@ def learn_weights(
     Returns (fitted weights, history) where history[r] =
     {round, loss, f, g, h, b} recorded AFTER round r's update;
     history[0] is the init evaluation (no update). Deterministic at any
-    parallelism (see _merge_round)."""
+    parallelism (see _round_totals)."""
     w = init or ScorerWeights()
     pr = np.array(priors if priors is not None else (w.f, w.g, w.h, w.b))
-    # r6: the λ probes and neighbor-sum contractions are weight-
-    # independent, so they are assembled ONCE (one cogrouped exchange —
-    # the shape every round used to pay) and persisted; each round is
-    # then a shuffle-free mapInPandas over the small contraction table.
-    # localCheckpoint on the λ side keeps the cogroup's analysis clean
-    # exactly as before; the persist lives only for the fit's duration.
+    # the λ probes and neighbor-sum contractions are weight-independent,
+    # so they are assembled ONCE (one cogrouped exchange) and persisted;
+    # each round is then a shuffle-free pass over the small contraction
+    # table. localCheckpoint on the λ side keeps the cogroup's analysis
+    # clean; the persist lives only for the fit's duration.
     conv_lambdas = conv_lambdas.localCheckpoint(eager=False)
     pre = preassembled_convs(cand_gold, conv_lambdas, lam_const).persist()
     # the cogroup inherits the full shuffle-partition count; re-reading
@@ -488,31 +411,17 @@ def learn_weights(
     # independent by construction.
     n_pre = pre.count()
     parts = max(1, min(pre.rdd.getNumPartitions(), n_pre // 256 + 1))
-    pre_eval = pre.coalesce(parts)
+    # planned once: every round reruns this RDD with a new θ, so a round
+    # pays task launch only — no SQL analysis, optimization or AQE pass
+    blobs = pre.coalesce(parts).select("blob").rdd
     sq = np.zeros(4)
     history: list[dict] = []
-    # the round query is a fixed two-stage scan→agg over a cached table;
-    # AQE has nothing to adapt there and its per-query re-optimization
-    # adds measurable latency × n_rounds — scoped off for the loop only
-    spark = cand_gold.sparkSession
-    aqe_prior = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
         for r in range(n_rounds + 1):
-            # r6: one-stage round — the kernel quantizes and partial-sums
-            # per partition (see _fused_round_kernel); the driver totals
-            # the per-partition longs (exact integer addition, one small
-            # row per partition — bounded by the cluster's task width,
-            # never by conversations). Replaces a 2-stage agg + exchange
-            # per round; measured −0.2 s/round locally, bit-identical.
-            rows = pre_eval.mapInPandas(
-                _fused_round_kernel(w), PART_SCHEMA
-            ).collect()
-            n = sum(int(r_["n_convs"]) for r_ in rows)
+            *tot, n = _round_totals(blobs, w)
             if n == 0:
                 loss, g = 0.0, np.zeros(4)
             else:
-                tot = [sum(int(r_[c]) for r_ in rows) for c in _QCOLS]
                 loss = tot[0] / _FIXED / n
                 g = np.array(tot[1:5], dtype=np.float64) / _FIXED / n
             theta = np.array([w.f, w.g, w.h, w.b])
@@ -534,7 +443,6 @@ def learn_weights(
                 h = -15.0 / gg
             w = replace(w, f=float(f), g=float(gg), h=float(h), b=float(b))
     finally:
-        spark.conf.set("spark.sql.adaptive.enabled", aqe_prior)
         pre.unpersist()
         conv_lambdas.unpersist()
     return w, history

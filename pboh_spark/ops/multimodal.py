@@ -2,7 +2,7 @@
 metadata, with the Spark-side plumbing (schema, partitioning, Arrow batch
 shape) real and tested. The default codec is a deterministic fake
 (seeded from the content hash — this container ships no image/audio
-libraries). ``strict=True`` demands a real codec: image decode/resize go
+libraries). ``strict=True`` demands a real codec: image decode goes
 through PIL when it is importable on the executors (import-guarded), and
 raise NotImplementedError otherwise — likewise audio/video, whose
 libraries (librosa/ffmpeg) would plug in at the same marked sites.
@@ -22,7 +22,6 @@ import hashlib
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 MEDIA_SCHEMA = T.StructType(
@@ -143,69 +142,3 @@ def extract_features(media: DataFrame, strict: bool = False) -> DataFrame:
             )
 
     return media.mapInPandas(fn, FEATURES_SCHEMA)
-
-
-RESIZE_SCHEMA = "media_id bigint, width int, height int, payload binary"
-
-
-def resize_images(
-    media: DataFrame, width: int = 64, height: int = 64, strict: bool = False
-) -> DataFrame:
-    """Image resize: output schema/partitioning real; pixels fake
-    (content-hash-seeded) by default, REAL grayscale resize via PIL under
-    ``strict=True`` when PIL is importable (NotImplementedError where it
-    isn't — this container ships no image libs). Non-image rows are
-    filtered JVM-side before Python ever sees them (predicate pushdown
-    keeps the Arrow traffic image-only)."""
-
-    def _strict_resize(payload: bytes) -> bytes:
-        Image = _pil_image()
-        if Image is None:
-            raise NotImplementedError("real resize requires PIL")
-        import io  # noqa: PLC0415
-
-        img = Image.open(io.BytesIO(payload)).convert("L")
-        return img.resize((width, height)).tobytes()
-
-    def fn(batches):
-        for pdf in batches:
-            if strict:
-                out = [_strict_resize(bytes(p)) for p in pdf["payload"]]
-            else:
-                out = [
-                    bytes(
-                        _fake_decode(bytes(p), width * height)
-                        .astype(np.uint8)
-                        .tobytes()
-                    )
-                    for p in pdf["payload"]
-                ]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "width": width,
-                    "height": height,
-                    "payload": out,
-                }
-            )
-
-    return media.where(F.col("kind") == "image").mapInPandas(fn, RESIZE_SCHEMA)
-
-
-def sample_frames(media: DataFrame, every_n: int = 10) -> DataFrame:
-    """Video frame-sampling plumbing: explodes frame indices JVM-side
-    (sequence + explode — the decode of each sampled frame would be the
-    mapInPandas step above). Returns (media_id, frame_idx)."""
-    return (
-        media.where(F.col("kind") == "video")
-        .select(
-            "media_id",
-            F.explode(
-                F.sequence(
-                    F.lit(0),
-                    F.greatest(F.col("meta.n_frames") - 1, F.lit(0)),
-                    F.lit(every_n),
-                )
-            ).alias("frame_idx"),
-        )
-    )

@@ -30,9 +30,9 @@ Reference parity (file:line in /root/reference/src/main/scala/):
   pulls for every stored (x,y) rho key and every stored
   (y_gold_neighbor, y_candidate) lambda key; the same gradient here,
   computed FULL-BATCH per round instead of per-sampled-doc (one
-  deterministic cogrouped job per round, exactly the learn_weights
-  topology — learning.py), with the >15 read-clamp of
-  Learning.scala:440-443 applied at update time.
+  deterministic cogrouped job per round on the same per-conversation
+  tensors as learn_weights — learning._conv_tensors), with the >15
+  read-clamp of Learning.scala:440-443 applied at update time.
 * serving — loopybeliefpropagation/ScorerFullLearnedParams.scala:38-54:
   stored key → learned value, missing key → default scorer. Here the
   override happens BEFORE the unchanged LBP kernel: learned rho
@@ -42,14 +42,15 @@ Reference parity (file:line in /root/reference/src/main/scala/):
   ``lambda_potential`` in the table the conv-pair probe joins, so
   backoff pairs still flow through the kernel's closed-form default.
 
-Determinism: per-conversation gradient rows are quantized to integer
-1e-9 units and merged with an order-independent long sum per parameter
-key (the same fixed-point trick as learning._merge_round), the AdaGrad
-state lives in the parameter DataFrames themselves, and the driver
-holds nothing but the round counter and loss history — so the fit is
-bit-identical at any partitioning and golden-oracle checkable, and at
-10^12-turn scale each round is one gradient job + one keyed update
-join, no driver-side parameter traffic at all.
+Determinism: the gradient kernel quantizes every per-conversation
+value to integer 1e-9 units (learning._quantize, the one rounding rule
+both fits share) and the merge is an order-independent long sum per
+parameter key, the AdaGrad state lives in the parameter DataFrames
+themselves, and the driver holds nothing but the round counter and
+loss history — so the fit is bit-identical at any partitioning and
+golden-oracle checkable, and at 10^12-turn scale each round is one
+gradient job + one keyed update join, no driver-side parameter traffic
+at all.
 """
 
 from __future__ import annotations
@@ -59,12 +60,14 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pboh_spark.learning import CLAMP, MAX_DOC, _FIXED
+from pboh_spark.learning import (
+    CLAMP, MAX_DOC, _FIXED, _conv_tensors, _quantize,
+)
 from pboh_spark.resolve import LAMBDA_FLOOR, _pack
 from pboh_spark.stats import ScorerWeights
 
 PGRAD_SCHEMA = (
-    "conv_id string, kind string, ngram string, e1 long, e2 long, val double"
+    "conv_id string, kind string, ngram string, e1 long, e2 long, val long"
 )
 READ_CLAMP = 15.0  # Learning.scala:440-443 (applied at update here)
 
@@ -196,6 +199,11 @@ def _ppl_conv(
 
 
 def _pgrad_kernel(w: ScorerWeights, lam_const: float):
+    """Cogroup kernel of one param-fit round: per conversation, the dense
+    tensors of learning._conv_tensors (the current rho parameter rides
+    in as ``rho``) and the effective-λ map of the λ side feed
+    ``_ppl_conv``; every emitted ``val`` is already quantized
+    (learning._quantize), so the keyed merge is a plain long sum."""
     def solve(cand: pd.DataFrame, lam: pd.DataFrame) -> pd.DataFrame:
         cols = ["conv_id", "kind", "ngram", "e1", "e2", "val"]
         if cand.empty:
@@ -212,44 +220,26 @@ def _pgrad_kernel(w: ScorerWeights, lam_const: float):
             train_keys = np.unique(
                 pk[lam["trainable"].to_numpy(np.bool_)]
             )
-        cand = cand.sort_values(["mention_id", "entity"])
-        mids = cand["mention_id"].unique()
-        L = len(mids)
-        K = int(cand.groupby("mention_id")["entity"].size().max())
-        ents = np.full((L, K), -1, dtype=np.int64)
-        rho_w = np.full((L, K), -1.0e30, dtype=np.float64)
-        logpop = np.zeros((L, K), dtype=np.float64)
-        surfaces = np.empty(L, dtype=object)
-        gold_ent = np.zeros(L, dtype=np.int64)
-        gold_idx = np.full(L, -1, dtype=np.int64)
-        for i, (_, grp) in enumerate(cand.groupby("mention_id", sort=True)):
-            k = len(grp)
-            e = grp["entity"].to_numpy()
-            ents[i, :k] = e
-            rho_w[i, :k] = grp["rho_w"].to_numpy()
-            logpop[i, :k] = grp["log_pop"].fillna(0.0).to_numpy(np.float64)
-            surfaces[i] = grp["ngram"].iloc[0]
-            ge = int(grp["gold_entity"].iloc[0])
-            gold_ent[i] = ge
-            hit = np.nonzero(e[:k] == ge)[0]
-            if len(hit):
-                gold_idx[i] = int(hit[0])
+        ents, rho_w, logpop, surfaces, gold_ent, gold_idx, _ = (
+            _conv_tensors(cand)
+        )
         loss, rho_g, lam_g, n = _ppl_conv(
             ents, rho_w, logpop, surfaces, gold_ent, gold_idx,
             lam_map, train_keys, w, lam_const,
         )
         rows = [
             {"conv_id": conv, "kind": "loss", "ngram": None,
-             "e1": n, "e2": 0, "val": loss}
+             "e1": n, "e2": 0, "val": _quantize(loss)}
         ]
         rows += [
             {"conv_id": conv, "kind": "rho", "ngram": ng,
-             "e1": ent, "e2": 0, "val": g}
+             "e1": ent, "e2": 0, "val": _quantize(g)}
             for (ng, ent), g in rho_g.items()
         ]
         rows += [
             {"conv_id": conv, "kind": "lam", "ngram": None,
-             "e1": int(k >> 32), "e2": int(k & 0xFFFFFFFF), "val": g}
+             "e1": int(k >> 32), "e2": int(k & 0xFFFFFFFF),
+             "val": _quantize(g)}
             for k, g in lam_g.items()
         ]
         return pd.DataFrame(rows, columns=cols)
@@ -339,14 +329,12 @@ def learn_param_tables(
     rho_p = init_rho_params(cand_gold).localCheckpoint()
     lam_p = init_lambda_params(lambda_table, min_cocit).localCheckpoint()
     history: list[dict] = []
-    q = lambda c: (F.sum(F.round(F.col(c) * _FIXED).cast("long")) / _FIXED)  # noqa: E731
     in_flight: list = []  # round-scoped persisted handles, released on ANY exit
     try:
         for r in range(n_rounds):
-            cg = cand_gold.join(
-                rho_p.select(
-                    "ngram", "entity", F.col("w").alias("rho_w")
-                ),
+            # the current parameter replaces the prior as the kernel's rho
+            cg = cand_gold.drop("rho").join(
+                rho_p.select("ngram", "entity", F.col("w").alias("rho")),
                 ["ngram", "entity"], "inner",
             )
             # rename the λ side's key: both cogroup sides descend from
@@ -363,9 +351,9 @@ def learn_param_tables(
                 .cogroup(lam_ck.groupBy("conv_id_l"))
                 .applyInPandas(_pgrad_kernel(w, lam_const), PGRAD_SCHEMA)
             )
-            # fixed-point merge per parameter key (order-independent)
+            # fixed-point merge per parameter key: an exact long sum
             merged = grads.groupBy("kind", "ngram", "e1", "e2").agg(
-                q("val").alias("gsum"),
+                (F.sum("val") / _FIXED).alias("gsum"),
                 F.count("*").alias("n"),
             ).persist()
             in_flight.append(merged)

@@ -69,7 +69,6 @@ XML_FIXTURE = str(
 GERBIL_DIR = str(
     Path(__file__).resolve().parent / "fixtures" / "gerbil_problems"
 )
-GERBIL_RAW = str(Path(__file__).resolve().parent / "fixtures" / "gerbil_raw")
 
 
 def test_xml_gold_adapter(spark):
@@ -132,15 +131,6 @@ def test_gerbil_adapter(spark):
     assert g == {
         "england": "England", "at&t labs": "AT&T", "new york": "New_York",
     }
-
-
-def test_gerbil_raw_texts(spark):
-    t = datasets.load_raw_texts(spark, GERBIL_RAW).collect()
-    assert len(t) == 1
-    row = t[0]
-    assert row["conv_id"] == "doc1.txt"
-    # lines joined by a space, the ’ → ' replacement applied
-    assert "somebody's friends on a second line" in row["text"]
 
 
 def test_xml_gold_end_to_end_accuracy(spark):

@@ -112,17 +112,6 @@ def test_stage_metrics_record_rows_checksum_upstream(spark, e2e):
     )
 
 
-def test_size_bucketed_stats(spark, e2e):
-    out, transcripts, gold, anchors, _ = e2e
-    blocked = spark.read.parquet(f"{out}/s3_blocked/data")
-    comp = spark.read.parquet(f"{out}/s6_components/data")
-    lp = evaluate.build_labeled_pairs(gold, blocked)
-    rows = evaluate.size_bucketed_f1(lp, comp, gold).collect()
-    assert len(rows) >= 2
-    for r in rows:
-        assert r["f1"] >= 0.95
-
-
 def test_threshold_calibration_grid(spark, e2e):
     """L5 grid-search analogue: one-pass P/R/F1 over the threshold grid;
     the production threshold (0.65) must sit in the F1-optimal plateau."""

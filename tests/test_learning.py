@@ -1,5 +1,5 @@
 """Weight learning (L2/L3, FewParamsLearning.scala:289-507,802-852):
-finite-difference gradient check, Spark/numpy kernel agreement,
+finite-difference gradient check, Spark round/numpy kernel agreement,
 partitioning determinism of the fixed-point merge, and fitted-beats-
 shipped on a corpus engineered so the validated constants misrank."""
 
@@ -13,7 +13,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from pboh_spark import learning, resolve
-from pboh_spark.learning import _pl_conv, learn_weights, pseudolikelihood_grads
+from pboh_spark.learning import _pl_conv, _quantize, learn_weights
 from pboh_spark.stats import ScorerWeights
 
 W = ScorerWeights()
@@ -153,9 +153,15 @@ def _crafted_corpus(spark, conv_ids):
 
 
 def test_spark_kernel_matches_numpy(spark):
+    """The live round path — ``preassembled_convs`` then one round of
+    per-partition partial sums — totals exactly the quantized loss and
+    gradients of the numpy reference ``_pl_conv``."""
     cand, lam = _crafted_corpus(spark, ["c0"])
-    out = pseudolikelihood_grads(cand, lam, W).collect()
-    assert len(out) == 1
+    blobs = (
+        learning.preassembled_convs(cand, lam, resolve.LAMBDA_FLOOR)
+        .select("blob").rdd
+    )
+    tot = learning._round_totals(blobs, W)
     ents = np.array([[1, 2], [3, -1]], dtype=np.int64)
     rho = np.array([[math.log(0.7), math.log(0.3)], [0.0, -1e30]])
     logpop = np.zeros((2, 2))
@@ -170,13 +176,9 @@ def test_spark_kernel_matches_numpy(spark):
     loss, g, n = _pl_conv(
         ents, rho, logpop, surfaces, gold_ent, gold_idx, c0, c1, W
     )
-    row = out[0]
-    assert row["loss"] == pytest.approx(loss, abs=1e-12)
-    assert row["g_f"] == pytest.approx(g[0], abs=1e-12)
-    assert row["g_g"] == pytest.approx(g[1], abs=1e-12)
-    assert row["g_h"] == pytest.approx(g[2], abs=1e-12)
-    assert row["g_b"] == pytest.approx(g[3], abs=1e-12) == 0.0  # no ctx col
-    assert row["n_mentions"] == n == 2
+    assert n == 2
+    assert g[3] == 0.0  # no ctx column
+    assert tot == [_quantize(loss), *(_quantize(x) for x in g), 1]
 
 
 def test_learning_is_partitioning_deterministic(spark):
@@ -321,11 +323,12 @@ def test_b_fit_end_to_end_on_synth_context(spark, universe):
 
 
 def test_fused_round_quantizer_matches_spark(spark):
-    """The r6 one-stage round merge quantizes per-conv doubles in the
-    Python kernel (learning._quantize) instead of a Spark-side
-    ``round(x·1e9).cast('long')`` projection. Pin exact parity against
-    the literal Spark expression over fuzz + HALF_UP boundary values —
-    one ulp of divergence here would flip the golden fit history."""
+    """Both fits quantize per-conversation doubles in their Python
+    kernels (learning._quantize); the Spark-side
+    ``round(x·1e9).cast('long')`` projection survives only here, as the
+    reference. Pin exact parity against it over fuzz + HALF_UP boundary
+    values — one ulp of divergence here would flip the golden fit
+    histories."""
     rng = np.random.default_rng(123)
     vals = np.concatenate([
         rng.normal(0, 1, 4000), rng.normal(0, 1e-6, 4000),

@@ -85,6 +85,102 @@ def test_lambda_gradient_matches_finite_differences():
         assert abs(lam_g.get(key, 0.0) - fd) < 1e-6, (key, lam_g.get(key), fd)
 
 
+def _two_conv_frames():
+    """Two conversations as the gradient cogroup hands them to the kernel
+    (rows deliberately unsorted; one log_pop NaN; one gold outside its
+    candidate set), plus the dense tensors each one must assemble to."""
+    nan = float("nan")
+    cand = pd.DataFrame(
+        [
+            # c0: _tiny_conv's conversation
+            ("c0", 12, 10, np.log(0.9), 0.3, "bar", 10),
+            ("c0", 11, 2, np.log(0.3), 0.4, "foo", 2),
+            ("c0", 11, 1, np.log(0.7), 0.5, "foo", 2),
+            # c1: three mentions, ragged candidate rows, gold 7 not a
+            # candidate of "qux"
+            ("c1", 23, 6, np.log(0.8), 0.2, "qux", 7),
+            ("c1", 22, 5, np.log(0.1), nan, "baz", 4),
+            ("c1", 21, 2, np.log(0.4), 0.6, "foo", 1),
+            ("c1", 22, 3, np.log(0.5), 0.7, "baz", 4),
+            ("c1", 21, 1, np.log(0.6), 0.1, "foo", 1),
+            ("c1", 22, 4, np.log(0.4), 0.9, "baz", 4),
+        ],
+        columns=["conv_id", "mention_id", "entity", "rho", "log_pop",
+                 "ngram", "gold_entity"],
+    )
+    lam = pd.DataFrame(
+        [
+            ("c0", 1, 10, 0.2, True), ("c0", 2, 10, 0.1, True),
+            ("c1", 1, 4, 0.3, True), ("c1", 2, 4, -0.2, False),
+            ("c1", 3, 7, 0.1, True), ("c1", 1, 7, -0.4, False),
+            ("c1", 4, 6, 0.25, True),
+        ],
+        columns=["conv_id_l", "e1", "e2", "lam_eff", "trainable"],
+    )
+    neg = -1e30
+    tensors = {
+        "c0": (
+            np.array([[1, 2], [10, -1]], dtype=np.int64),
+            np.array([[np.log(0.7), np.log(0.3)], [np.log(0.9), neg]]),
+            np.array([[0.5, 0.4], [0.3, 0.0]]),
+            np.array(["foo", "bar"], dtype=object),
+            np.array([2, 10], dtype=np.int64),
+            np.array([1, 0], dtype=np.int64),
+        ),
+        "c1": (
+            np.array([[1, 2, -1], [3, 4, 5], [6, -1, -1]], dtype=np.int64),
+            np.array([
+                [np.log(0.6), np.log(0.4), neg],
+                [np.log(0.5), np.log(0.4), np.log(0.1)],
+                [np.log(0.8), neg, neg],
+            ]),
+            np.array([[0.1, 0.6, 0.0], [0.7, 0.9, 0.0], [0.2, 0.0, 0.0]]),
+            np.array(["foo", "baz", "qux"], dtype=object),
+            np.array([1, 4, 7], dtype=np.int64),
+            np.array([0, 1, -1], dtype=np.int64),
+        ),
+    }
+    return cand, lam, tensors
+
+
+def test_pgrad_kernel_emits_quantized_reference_gradients():
+    """The live param-fit kernel (tensor assembly via
+    learning._conv_tensors + quantization in the kernel) against the
+    numpy reference on hand-built tensors: every emitted long equals
+    learning._quantize of the matching ``_ppl_conv`` entry, and no key
+    is missing or extra."""
+    lam_const = -8.0
+    cand, lam, tensors = _two_conv_frames()
+    solve = param_learning._pgrad_kernel(W, lam_const)
+    for conv, (ents, rho, lp, surf, gold_ent, gold_idx) in tensors.items():
+        lc = lam[lam["conv_id_l"] == conv]
+        pk = _pack(lc["e1"].to_numpy(), lc["e2"].to_numpy())
+        lam_map = dict(zip(pk.tolist(), lc["lam_eff"].tolist()))
+        tk = np.unique(pk[lc["trainable"].to_numpy()])
+        loss, rho_g, lam_g, n = param_learning._ppl_conv(
+            ents, rho, lp, surf, gold_ent, gold_idx, lam_map, tk, W,
+            lam_const,
+        )
+        assert n >= 2 and rho_g and lam_g  # every row kind exercised
+        out = solve(cand[cand["conv_id"] == conv].reset_index(drop=True), lc)
+        assert (out["conv_id"] == conv).all()
+        got = {
+            (r.kind, r.ngram, int(r.e1), int(r.e2)): r.val
+            for r in out.itertuples()
+        }
+        want = {("loss", None, n, 0): learning._quantize(loss)}
+        want.update({
+            ("rho", ng, ent, 0): learning._quantize(g)
+            for (ng, ent), g in rho_g.items()
+        })
+        want.update({
+            ("lam", None, k >> 32, k & 0xFFFFFFFF): learning._quantize(g)
+            for k, g in lam_g.items()
+        })
+        assert got == want, conv
+        assert all(isinstance(v, (int, np.integer)) for v in got.values())
+
+
 # ---------------------------------------------------------------------------
 # planted wrong-prior corpus: per-param capacity is the only fix
 # ---------------------------------------------------------------------------

@@ -145,6 +145,22 @@ def test_no_forced_broadcast_hints_in_library_source():
     assert not offenders, offenders
 
 
+def test_no_session_conf_mutation_in_library_source():
+    """Repo policy: no library helper mutates session state. A
+    ``conf.set(`` leaks into every later query of the session (and races
+    any concurrent one), so session configuration lives in session.py
+    alone. Source-level, like the broadcast-hint guard above."""
+    root = Path(__file__).resolve().parents[1] / "pboh_spark"
+    offenders = []
+    for py in root.rglob("*.py"):
+        if py.name == "session.py":
+            continue
+        for i, line in enumerate(py.read_text().splitlines(), 1):
+            if "conf.set(" in line.split("#", 1)[0]:
+                offenders.append(f"{py.relative_to(root)}:{i}")
+    assert not offenders, offenders
+
+
 def test_scoring_udf_is_arrow_batched(plans):
     """The Jaro-Winkler UDF must appear as an Arrow eval, never row-wise."""
     p = plans["link_pair_scoring"]
